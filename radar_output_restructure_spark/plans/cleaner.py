@@ -18,9 +18,21 @@ Reference semantics, re-expressed as one Spark job per topic:
   entry so the next restructure run re-extracts it
   (AccountantImpl.kt:55-59 offset revocation).
 
-Target files are read back as text (CSV with header / JSON-lines; gzip
-decodes natively). Zip-compressed targets are not re-readable by the scan,
-so their sources are conservatively never deleted.
+Target files are read back WHOLE and decoded by one function next to the
+writer that defines their format, `sinks/writers.decode_target_files` (CSV
+against each file's own header, JSON-lines split on "\n"; none / gzip /
+zip). Where the bytes come from depends on the target storage:
+
+* `executor_safe` storage (local, S3, Azure): the anti-join's own job reads
+  them — the expectations' distinct target paths feed a mapInPandas that
+  calls `target_storage.read` on the executors. Nothing is collected to the
+  driver and no file listing runs.
+* driver-only storage (`HadoopTargetStorage`: abfs://, hdfs://, file://):
+  the driver collects the distinct target paths, keeps those that exist and
+  loads them with Spark's binaryFile source.
+
+Parquet targets keep a typed read per attempt (driver-collected paths). A
+missing target yields no rows, so its sources are revoked, never deleted.
 """
 
 from __future__ import annotations
@@ -33,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from radar_output_restructure_spark.plans.restructure import RestructureConfig, RestructurePlan
+from radar_output_restructure_spark.sinks.writers import decode_target_files
 from radar_output_restructure_spark.sources.kafka_tree import (
     parse_offset_filename,
 )
@@ -102,12 +115,11 @@ class SourceDataCleaner:
     # -- C2: extraction verification ------------------------------------------
 
     def _output_root(self) -> str:
-        """The output root exactly as `_metadata.file_path` will render it:
-        URI targets (s3a://, abfs://, hdfs://) pass through; local paths are
-        made ABSOLUTE, because the target read-back reports absolute
-        `file:` URIs and a relative `output_dir` would make every
-        expectation path unmatched -> every file revoked -> unbounded
-        duplicate re-extraction."""
+        """The output root of the expectation paths: URI targets (s3a://,
+        abfs://, hdfs://) pass through; local paths are made ABSOLUTE, because
+        the Spark-side read-backs report absolute `file:` URIs and a relative
+        `output_dir` would make every expectation path unmatched -> every
+        file revoked -> unbounded duplicate re-extraction."""
         root = self.config.output_dir.rstrip(os.sep)
         if "://" in root or root.startswith("file:"):
             return root
@@ -170,76 +182,27 @@ class SourceDataCleaner:
             out = out.unionByName(p)
         return out, covered
 
-    def _whole_file_target_rows(
-        self, existing: list[str], codec: str | None
-    ) -> DataFrame:
-        """(target_path, time_str) by parsing each target file WHOLE.
+    def _existing_targets(self, src: DataFrame) -> list[str]:
+        """The expectations' distinct target paths that exist now, collected
+        to the driver — only for the read-backs that need the list there."""
+        tgt = self.plan.target_storage
+        rows = src.select("target_path").distinct().collect()
+        return [r.target_path for r in rows if tgt.exists(r.target_path)]
 
-        Targets load as binary files (they are group-bounded — one
-        user-hour of rows) and an Arrow-batched mapInPandas decodes the
-        codec (zip single entry / gzip / none) and parses rows PER FILE,
-        mirroring the writer's codec (sinks/writers.py ZIP_LEVEL) and the
-        reference's read-back-through-the-compression-factory verification
-        (cleaner/TimestampFileCache.kt:39-51, compression/ZipCompression.kt:
-        10-26). This is the only correct CSV read-back: a single
-        spark.read.csv over many files binds every file to the FIRST
-        file's header positionally (wrong column under schema-evolution
-        attempts) and splits RFC4180-quoted embedded newlines into garbage
-        rows without multiLine. Python csv parses each file against its
-        OWN header (the `value.time` index per file) and handles quoted
-        newlines natively. JSON rows come back as raw lines so the SAME
-        get_json_object expression as the line-reader path extracts the
-        time token — json round-trips through a float would re-render it.
-        """
-        import pandas as pd
-
-        fmt = self.config.output_format
-        bin_df = self.spark.read.format("binaryFile").load(existing)
-
-        def decode_rows(batches):
-            import csv as csvmod
-            import gzip as gzipmod
-            import io as iomod
-            import re as remod
-            import zipfile
-
-            for pdf in batches:
-                paths: list[str] = []
-                vals: list[str | None] = []
-                for path, content in zip(pdf["path"], pdf["content"]):
-                    data = bytes(content)
-                    if codec == "zip":
-                        with zipfile.ZipFile(iomod.BytesIO(data)) as zf:
-                            data = zf.read(zf.namelist()[0])
-                    elif codec == "gzip":
-                        data = gzipmod.decompress(data)
-                    text = data.decode("utf-8")
-                    p = remod.sub("^file:/+", "/", str(path))
-                    if fmt == "json":
-                        for line in text.splitlines():
-                            if line:
-                                paths.append(p)
-                                vals.append(line)
-                    else:
-                        rows = list(csvmod.reader(iomod.StringIO(text)))
-                        if not rows:
-                            continue
-                        header, body = rows[0], rows[1:]
-                        try:
-                            ti = header.index("value.time")
-                        except ValueError:
-                            ti = -1
-                        for row in body:
-                            paths.append(p)
-                            vals.append(
-                                row[ti] if 0 <= ti < len(row) else None
-                            )
-                yield pd.DataFrame({"target_path": paths, "payload": vals})
-
-        rows = bin_df.select("path", "content").mapInPandas(
-            decode_rows, "target_path string, payload string"
-        )
-        if fmt == "json":
+    def _target_rows(self, src: DataFrame) -> DataFrame:
+        """(target_path, time_str) for every row of the target files the
+        expectations `src` name. A missing target yields no rows, so its
+        records stay unmatched."""
+        cfg = self.config
+        if cfg.output_format == "parquet":
+            return self._parquet_target_rows(self._existing_targets(src))
+        if self.plan.target_storage.executor_safe:
+            rows = self._executor_target_rows(src)
+        else:
+            rows = self._binary_target_rows(self._existing_targets(src))
+        if cfg.output_format == "json":
+            # the SAME get_json_object as the expectations side: a float
+            # round-trip would re-render the time token
             time_str = F.get_json_object(F.col("payload"), "$.value.time")
         else:
             time_str = F.col("payload")
@@ -247,41 +210,82 @@ class SourceDataCleaner:
             "target_path", time_str.cast("string").alias("time_str")
         )
 
-    def _target_rows(self, target_paths: list[str]) -> DataFrame:
-        """(target_path, time_str) for every row of the touched target files."""
-        cfg = self.config
-        tgt = self.plan.target_storage
-        existing = [p for p in target_paths if tgt.exists(p)]
+    def _executor_target_rows(self, src: DataFrame) -> DataFrame:
+        """Read-back inside the anti-join's job: the distinct target paths
+        stay on the executors, each task reads its targets through the
+        (picklable) target storage and decodes them whole. No path list
+        reaches the driver and no file listing runs."""
+        storage = self.plan.target_storage
+        fmt, codec = self.config.output_format, self.config.compression
+
+        def read_targets(batches):
+            for pdf in batches:
+                pairs = []
+                for path in pdf["target_path"]:
+                    try:
+                        pairs.append((path, storage.read(path)))
+                    except Exception:
+                        if storage.exists(path):
+                            raise
+                        # missing target: no rows, its records stay unmatched
+                yield decode_target_files(pairs, fmt, codec)
+
+        return (
+            src.select("target_path")
+            .distinct()
+            .mapInPandas(read_targets, "target_path string, payload string")
+        )
+
+    def _binary_target_rows(self, existing: list[str]) -> DataFrame:
+        """Read-back for storage whose handle cannot leave the driver
+        (HadoopTargetStorage: abfs://, hdfs://, file://): Spark's binaryFile
+        source reads the files through the same Hadoop FileSystem. It reports
+        qualified `file:` URIs for local paths, so each row is mapped back to
+        the expectation's own path string."""
+        import re
+
+        if not existing:
+            return self.spark.createDataFrame(
+                [], "target_path string, payload string"
+            )
+        fmt, codec = self.config.output_format, self.config.compression
+
+        def norm(p: str) -> str:
+            return re.sub("^file:/+", "/", p)
+
+        expected = {norm(p): p for p in existing}
+
+        def decode(batches):
+            for pdf in batches:
+                yield decode_target_files(
+                    [
+                        (expected.get(norm(path), path), bytes(content))
+                        for path, content in zip(pdf["path"], pdf["content"])
+                    ],
+                    fmt, codec,
+                )
+
+        return (
+            self.spark.read.format("binaryFile").load(existing)
+            .select("path", "content")
+            .mapInPandas(decode, "target_path string, payload string")
+        )
+
+    def _parquet_target_rows(self, existing: list[str]) -> DataFrame:
+        """Typed parquet read-back. Attempts exist BECAUSE schemas differ (a
+        value.time TYPE change would make one scan over both attempts' files
+        throw or null-fill), so each attempt group is read separately and the
+        projected strings unioned; the double -> string cast is the same Java
+        rendering the expectations side applies."""
+        import re
+
         if not existing:
             return self.spark.createDataFrame(
                 [], "target_path string, time_str string"
             )
-        if cfg.output_format == "csv" or cfg.compression == "zip":
-            # whole-file parse: per-file headers + RFC4180 quoted newlines
-            # (see _whole_file_target_rows) — one spark.read.csv over mixed
-            # -attempt files would bind columns positionally to the first
-            # file's header
-            return self._whole_file_target_rows(existing, cfg.compression)
-        if cfg.output_format == "json":
-            df = self.spark.read.text(existing)
-            time_str = F.get_json_object(F.col("value"), "$.value.time")
-            path = F.regexp_replace(
-                F.col("_metadata.file_path"), "^file:/+", "/"
-            )
-            return df.select("*", "_metadata").select(
-                path.alias("target_path"),
-                time_str.cast("string").alias("time_str"),
-            )
-        # parquet: typed target. Attempts exist BECAUSE schemas differ (a
-        # value.time TYPE change would make one scan over both attempts'
-        # files throw or null-fill), so read each attempt group separately
-        # and union the projected strings; the double -> string cast is the
-        # same Java rendering the expectations side applies.
-        import re as _re
-
         by_attempt: dict[str, list[str]] = {}
         for p in existing:
-            m = _re.search(r"_(\d+)\.parquet$", p)
+            m = re.search(r"_(\d+)\.parquet$", p)
             by_attempt.setdefault(m.group(1) if m else "0", []).append(p)
         parts: list[DataFrame] = []
         for group in by_attempt.values():
@@ -321,10 +325,7 @@ class SourceDataCleaner:
         src, covered = self._source_expectations(topic, files)
         src = src.cache()
         try:
-            targets = [
-                r.target_path for r in src.select("target_path").distinct().collect()
-            ]
-            tgt = self._target_rows(targets)
+            tgt = self._target_rows(src)
             missing = (
                 src.withColumn(
                     "time_str", F.coalesce(F.col("time_str"), F.lit("\x00missing"))

@@ -612,17 +612,18 @@ class RestructurePlan:
     @Timer.time("restructure.schema")
     def _fingerprint_groups(
         self, topic: str, files: list[FileEntry]
-    ) -> list[tuple[int, str | None, list[list[FileEntry]]]]:
+    ) -> list[tuple[int, str | None, list[tuple[str, list[FileEntry]]]]]:
         """Group candidate files by source-schema fingerprint, resolve each
         fingerprint to its persistent attempt suffix (SURVEY §1.3:
         schema-evolution-by-suffix at file granularity), and gather the
         fingerprint groups per attempt.
 
-        Returns [(attempt, superset schema JSON, [file groups])] sorted by
-        attempt. Several fingerprint groups share one attempt when their
-        schemas are order-preserving subsets of the attempt's superset schema
-        (reference subset-write semantics, CsvAvroConverterTest.kt subSchema);
-        their rows null-fill into the superset projection at read time.
+        Returns [(attempt, superset schema JSON, [(group canon, files)])]
+        sorted by attempt. Several fingerprint groups share one attempt when
+        their schemas are order-preserving subsets of the attempt's superset
+        schema (reference subset-write semantics, CsvAvroConverterTest.kt
+        subSchema); their rows null-fill into the superset projection at read
+        time.
         """
         import hashlib
 
@@ -643,9 +644,11 @@ class RestructurePlan:
         attempts, schemas = self.attempts.assign(
             topic, [(fp, fp_canon[fp]) for fp in order]
         )
-        per_attempt: dict[int, list[list[FileEntry]]] = {}
+        per_attempt: dict[int, list[tuple[str, list[FileEntry]]]] = {}
         for fp, group in by_fp.items():
-            per_attempt.setdefault(attempts[fp], []).append(group)
+            per_attempt.setdefault(attempts[fp], []).append(
+                (fp_canon[fp], group)
+            )
         return [
             (attempt, schemas.get(str(attempt)), groups)
             for attempt, groups in sorted(per_attempt.items())
@@ -676,7 +679,10 @@ class RestructurePlan:
         (the writer) and the cleaner's _source_expectations must see
         byte-identical frames, or dedup keeps different survivors in
         verification than were written and the cleaner revokes/re-extracts
-        the same files forever (plans/cleaner.py:120)."""
+        the same files forever (plans/cleaner.py:120).
+
+        Each Avro group is scanned with its fingerprint canon as the known
+        schema, so no scan starts a header-probe job."""
         cfg = self.config
         for attempt, schema_json, fp_groups in self._fingerprint_groups(
             topic, files
@@ -687,11 +693,16 @@ class RestructurePlan:
                 else None
             )
             dfs = []
-            for group in fp_groups:
+            for canon, group in fp_groups:
                 d = read_topic_tree(
                     self.spark, cfg.input_dir, topic=topic,
                     file_format=cfg.source_format,
                     paths=[f.path for f in group],
+                    schema=(
+                        T.StructType.fromJson(json.loads(canon))
+                        if cfg.source_format == "avro"
+                        else None
+                    ),
                 )
                 if sup is not None:
                     d = conform_to(d, sup, keep=[*META_COLS, "topic"])
@@ -699,7 +710,7 @@ class RestructurePlan:
             df = dfs[0]
             for other in dfs[1:]:
                 df = df.unionByName(other)
-            yield attempt, sup, df, [f for g in fp_groups for f in g]
+            yield attempt, sup, df, [f for _c, g in fp_groups for f in g]
 
     def run_topic(self, topic: str) -> list[str]:
         cfg = self.config

@@ -200,19 +200,64 @@ def _dedup_json_content(old: bytes, new: bytes) -> bytes:
     return ("\n".join(out) + "\n").encode()
 
 
+def _decompress(data: bytes, compression: str | None) -> bytes:
+    """A target file's bytes with its codec undone (gzip, or the single
+    entry of a zip archive)."""
+    if compression == "gzip":
+        return gzip.decompress(data)
+    if compression == "zip":
+        import zipfile
+
+        with zipfile.ZipFile(io.BytesIO(data)) as zf:
+            return zf.read(zf.namelist()[0])
+    return data
+
+
 def _read_full_content(
     final: str, compression: str | None, storage: TargetStorage
 ) -> bytes:
     """Decompressed current content of an existing target file."""
-    data = storage.read(final)
-    if compression == "gzip":
-        data = gzip.decompress(data)
-    elif compression == "zip":
-        import zipfile
+    return _decompress(storage.read(final), compression)
 
-        with zipfile.ZipFile(io.BytesIO(data)) as zf:
-            data = zf.read(zf.namelist()[0])
-    return data
+
+def decode_target_files(files, fmt: str, compression: str | None):
+    """The cleaner's read-back of csv / json targets (plans/cleaner.py):
+    pandas (target_path, payload) for every row of whole target files, given
+    as (path, bytes) pairs.
+
+    Undoes the codec and parses rows PER FILE, like the reference's read-back
+    through the compression factory (cleaner/TimestampFileCache.kt:39-51,
+    compression/ZipCompression.kt:10-26). CSV parses each file against its
+    OWN header — a single spark.read.csv over many files binds every file to
+    the first file's header positionally (wrong column under schema-evolution
+    attempts) — and keeps RFC4180-quoted embedded newlines inside their
+    record; the payload is the `value.time` cell. JSON payloads are the raw
+    lines, so the caller extracts the time token with the same expression as
+    the expectations side."""
+    import csv
+
+    import pandas as pd
+
+    paths: list[str] = []
+    vals: list[str | None] = []
+    for path, data in files:
+        text = _decompress(data, compression).decode("utf-8")
+        if fmt == "json":
+            # the writer ends lines with "\n" alone; str.splitlines would also
+            # split at U+0085/U+2028/U+2029, which to_json leaves unescaped
+            lines = [ln for ln in text.split("\n") if ln]
+            paths += [path] * len(lines)
+            vals += lines
+            continue
+        rows = list(csv.reader(io.StringIO(text)))
+        if not rows:
+            continue
+        header, body = rows[0], rows[1:]
+        ti = header.index("value.time") if "value.time" in header else -1
+        for row in body:
+            paths.append(path)
+            vals.append(row[ti] if 0 <= ti < len(row) else None)
+    return pd.DataFrame({"target_path": paths, "payload": vals})
 
 
 def _write_full_content(

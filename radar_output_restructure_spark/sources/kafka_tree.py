@@ -172,29 +172,11 @@ def has_native_avro(spark: SparkSession) -> bool:
     return cached
 
 
-def _read_avro_tree_python(
-    spark: SparkSession, load, exclude_topics: set[str] | None = None
-) -> DataFrame:
-    """Jar-less Avro scan: binaryFile ships each container file whole to an
-    executor; an Arrow-batched mapInPandas decodes it with the pure-Python
-    codec. Kafka-sink files are flush-sized (MBs), so one-file-per-row is the
-    natural split granularity — the same unit the reference processes
-    (util/GenericRecordReader.kt:11-43).
-
-    `exclude_topics` prunes BEFORE the decode (path predicate pushed to the
-    binaryFile scan): an excluded topic must never be schema-probed or
-    decoded — its containers may carry a different schema, and a post-scan
-    row filter would already have crashed on the mixed-schema check."""
-    import pandas as pd
-
+def _probe_record_type(bin_df: DataFrame, load) -> T.DataType:
+    """Spark record type of the first file of a binaryFile scan, from its
+    container header — one small Spark job."""
     from radar_output_restructure_spark.sources import avro_io
 
-    bin_df = spark.read.format("binaryFile").load(load)
-    if exclude_topics:
-        # tree layout <in>/<topic>/partition=*/<file>: the topic is the
-        # third-from-last path segment
-        topic_seg = F.element_at(F.split(F.col("path"), "/"), -3)
-        bin_df = bin_df.filter(~topic_seg.isin(*sorted(exclude_topics)))
     # header-only probe: read_header needs O(KB), not the whole container
     probe = (
         bin_df.select(F.substring("content", 1, 64 * 1024).alias("head"))
@@ -211,6 +193,42 @@ def _read_avro_tree_python(
         whole = bin_df.select("content").limit(1).first()
         writer_schema, _, _, _ = avro_io.read_header(bytes(whole.content))
     record_type, _ = avro_io.avro_to_spark_type(writer_schema)
+    return record_type
+
+
+def _read_avro_tree_python(
+    spark: SparkSession,
+    load,
+    exclude_topics: set[str] | None = None,
+    schema: T.StructType | None = None,
+) -> DataFrame:
+    """Jar-less Avro scan: binaryFile ships each container file whole to an
+    executor; an Arrow-batched mapInPandas decodes it with the pure-Python
+    codec. Kafka-sink files are flush-sized (MBs), so one-file-per-row is the
+    natural split granularity — the same unit the reference processes
+    (util/GenericRecordReader.kt:11-43).
+
+    `exclude_topics` prunes BEFORE the decode (path predicate pushed to the
+    binaryFile scan): an excluded topic must never be schema-probed or
+    decoded — its containers may carry a different schema, and a post-scan
+    row filter would already have crashed on the mixed-schema check.
+
+    `schema`: the Spark record type the caller already knows (the
+    fingerprint canon of these files). It replaces the header probe, a Spark
+    job of its own; every file is still checked against it in the task."""
+    import pandas as pd
+
+    from radar_output_restructure_spark.sources import avro_io
+
+    bin_df = spark.read.format("binaryFile").load(load)
+    if exclude_topics:
+        # tree layout <in>/<topic>/partition=*/<file>: the topic is the
+        # third-from-last path segment
+        topic_seg = F.element_at(F.split(F.col("path"), "/"), -3)
+        bin_df = bin_df.filter(~topic_seg.isin(*sorted(exclude_topics)))
+    record_type = (
+        schema if schema is not None else _probe_record_type(bin_df, load)
+    )
     if not isinstance(record_type, T.StructType):
         raise ValueError("top-level avro schema must be a record")
     out_schema = T.StructType(
@@ -228,7 +246,7 @@ def _read_avro_tree_python(
     # connect.version bumps) land in ONE group — a raw-JSON comparison here
     # would crash that group's scan forever even though every file decodes
     # fine with its own header schema.
-    probe_canon = record_type.json()
+    scan_canon = record_type.json()
 
     def decode(batches):
         for pdf in batches:
@@ -238,16 +256,17 @@ def _read_avro_tree_python(
             ):
                 file_schema, records = avro_io.read_container(bytes(content))
                 file_type, _ = avro_io.avro_to_spark_type(file_schema)
-                if file_type.json() != probe_canon:
+                if file_type.json() != scan_canon:
                     # Mixed-schema scan must fail loudly: decoding against
-                    # the probe schema would silently drop extra fields and
+                    # the scan schema would silently drop extra fields and
                     # null-fill missing ones. Callers group files by schema
                     # fingerprint first (plans/restructure.py) and never hit
                     # this; a raw read_topic_tree over a drifted topic does.
                     raise ValueError(
                         f"avro schema of {path!r} differs from the probe "
-                        "file's schema; group files by fingerprint (pass "
-                        "`paths` per schema group) before scanning"
+                        "file's schema (or the `schema` passed in); group "
+                        "files by fingerprint (pass `paths` per schema "
+                        "group) before scanning"
                     )
                 if not records:
                     # header-only flush: an empty pandas frame would type
@@ -282,6 +301,7 @@ def read_topic_tree(
     file_format: str = "parquet",
     exclude_topics: set[str] | None = None,
     paths: list[str] | None = None,
+    schema: T.StructType | None = None,
 ) -> DataFrame:
     """Load a Kafka-sink tree. One scan for all topics when schemas align;
     per-topic calls when they don't (the reference always processes per-topic,
@@ -296,6 +316,12 @@ def read_topic_tree(
     format="avro" uses the native spark-avro DataSource when its jar is on
     the classpath and falls back to the distributed pure-Python container
     reader (avro_io.py) otherwise, with identical downstream semantics.
+
+    `schema`: the record type of every file in `paths`, when the caller
+    already knows it (plans/restructure.attempt_frames passes each
+    fingerprint group's canon). The pure-Python reader then starts no
+    header-probe job; without it, one probe job reads the first file's
+    header. Other readers infer their own schema and ignore it.
     """
     load = paths if paths is not None else f"{input_dir}/{topic or '*'}/partition=*/"
     if (
@@ -325,7 +351,7 @@ def read_topic_tree(
                 f"every topic under {input_dir!r} is excluded; nothing to scan"
             )
     if file_format == "avro" and not has_native_avro(spark):
-        decoded = _read_avro_tree_python(spark, load, exclude_topics)
+        decoded = _read_avro_tree_python(spark, load, exclude_topics, schema)
         df = _attach_path_metadata(decoded, "__src_path", "__src_mtime")
     else:
         df = spark.read.format(file_format).load(load)

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import Row
 
 from radar_output_restructure_spark.plans.cleaner import CleanerConfig, SourceDataCleaner
@@ -339,3 +340,173 @@ def test_cleaner_mixed_attempt_csv_verification(spark, tmp_path):
     result = cleaner.run_topic("t")
     assert sorted(result["deleted"]) == sorted([f0, f1])
     assert result["revoked"] == []
+
+
+def _target_text(path: str, compression: str | None) -> str:
+    import gzip as _gzip
+    import zipfile
+
+    if compression == "zip":
+        with zipfile.ZipFile(path) as zf:
+            return zf.read(zf.namelist()[0]).decode("utf-8")
+    with (_gzip.open if compression == "gzip" else open)(path, "rb") as fh:
+        return fh.read().decode("utf-8")
+
+
+@pytest.mark.parametrize("sep", ["\u0085", "\u2028"])
+@pytest.mark.parametrize("compression", [None, "gzip", "zip"])
+def test_cleaner_json_unicode_line_separator_in_value(
+    spark, tmp_path, compression, sep
+):
+    """to_json leaves U+0085 / U+2028 unescaped inside string values and the
+    writer ends lines with "\\n" alone. The read-back must split on "\\n"
+    only: str.splitlines would cut such a row in two, leave its records
+    unmatched and revoke the source on every cycle."""
+    input_dir, output_dir = str(tmp_path / "in"), str(tmp_path / "out")
+    f0 = _write_fixture(
+        spark, input_dir, "t",
+        _rows(3600.0, 3, status=f"CONN{sep}ECTED"), 0, 0, 2,
+        SERVER_STATUS_SCHEMA,
+    )
+    _write_fixture(
+        spark, input_dir, "t", _rows(7200.0, 2), 0, 3, 4, SERVER_STATUS_SCHEMA
+    )
+    cfg = RestructureConfig(
+        input_dir=input_dir, output_dir=output_dir,
+        output_format="json", compression=compression,
+    )
+    finals = RestructurePlan(spark, cfg).run()["t"]
+    target = [f for f in finals if "19700101_0100.json" in f][0]
+    assert sep in _target_text(target, compression)  # written unescaped
+
+    cleaner = SourceDataCleaner(spark, cfg, CleanerConfig(age_days=0.0))
+    result = cleaner.run_topic("t")
+    assert result["deleted"] == [f0] and result["revoked"] == []
+
+
+@pytest.mark.parametrize(
+    "output_format,compression", [("csv", "gzip"), ("json", None)]
+)
+def test_cleaner_hadoop_target_storage(
+    spark, tmp_path, output_format, compression
+):
+    """Driver-only target storage (HadoopTargetStorage, here over a file://
+    output) reads targets back through the binaryFile branch: an extracted
+    source deletes, a source whose target was removed revokes. (zip is a
+    direct-writer feature, so this storage writes none / gzip only.)"""
+    from radar_output_restructure_spark.sinks.storage import (
+        HadoopTargetStorage,
+    )
+
+    input_dir = str(tmp_path / "in")
+    f0 = _write_fixture(
+        spark, input_dir, "t", _rows(3600.0, 3), 0, 0, 2, SERVER_STATUS_SCHEMA
+    )
+    f1 = _write_fixture(
+        spark, input_dir, "t", _rows(7200.0, 2), 0, 3, 4, SERVER_STATUS_SCHEMA
+    )
+    _write_fixture(
+        spark, input_dir, "t", _rows(10800.0, 1), 0, 5, 5, SERVER_STATUS_SCHEMA
+    )
+    cfg = RestructureConfig(
+        input_dir=input_dir,
+        output_dir="file://" + str(tmp_path / "out"),
+        output_format=output_format,
+        compression=compression,
+    )
+    plan = RestructurePlan(spark, cfg)
+    assert isinstance(plan.target_storage, HadoopTargetStorage)
+    plan.run()
+    ext = ".gz" if compression == "gzip" else ""
+    removed = tmp_path / "out" / "p" / "u" / "t" / (
+        f"19700101_0200.{output_format}{ext}"
+    )
+    assert removed.exists()
+    removed.unlink()
+
+    cleaner = SourceDataCleaner(
+        spark, cfg, CleanerConfig(age_days=0.0), plan=plan
+    )
+    result = cleaner.run_topic("t")
+    assert result["deleted"] == [f0] and result["revoked"] == [f1]
+    assert not os.path.exists(f0) and os.path.exists(f1)
+
+
+def _write_avro_topic(input_dir: str, topic: str, n_users: int) -> None:
+    """Three Kafka-sink Avro containers for `topic`: the first two hold one
+    record per user in hour 1 (n_users target files), the third holds the
+    partition's max offset so the first two are cleaner candidates."""
+    from radar_output_restructure_spark.sources import avro_io
+
+    key = {
+        "type": "record", "name": "ObservationKey",
+        "fields": [
+            {"name": "projectId", "type": ["null", "string"]},
+            {"name": "userId", "type": "string"},
+            {"name": "sourceId", "type": "string"},
+        ],
+    }
+    value = {
+        "type": "record", "name": "V",
+        "fields": [{"name": "time", "type": "double"}],
+    }
+    schema = {
+        "type": "record", "name": topic,
+        "fields": [
+            {"name": "key", "type": key}, {"name": "value", "type": value},
+        ],
+    }
+    d = os.path.join(input_dir, topic, "partition=0")
+    os.makedirs(d, exist_ok=True)
+    for off, t0 in ((0, 3600.0), (n_users, 3700.0), (2 * n_users, 7200.0)):
+        records = [
+            {
+                "key": {"projectId": "p", "userId": f"u{i}", "sourceId": "s"},
+                "value": {"time": t0 + i},
+            }
+            for i in range(n_users)
+        ]
+        avro_io.write_container(
+            os.path.join(d, f"{topic}+0+{off}+{off + n_users - 1}.avro"),
+            schema, records,
+        )
+
+
+def test_cleaner_verify_job_count_independent_of_target_count(
+    spark, tmp_path
+):
+    """verify_topic starts the same Spark jobs whether its candidates map to
+    8 targets or to more than 32: no file-listing job for many targets
+    (spark.sql.sources.parallelPartitionDiscovery.threshold) and no Avro
+    header-probe job (the fingerprint canon is the scan schema)."""
+    input_dir, output_dir = str(tmp_path / "in"), str(tmp_path / "out")
+    _write_avro_topic(input_dir, "narrow", 8)
+    _write_avro_topic(input_dir, "wide", 40)
+    cfg = RestructureConfig(
+        input_dir=input_dir, output_dir=output_dir, source_format="avro",
+        compression="gzip",
+    )
+    plan = RestructurePlan(spark, cfg)
+    plan.run()
+    cleaner = SourceDataCleaner(
+        spark, cfg, CleanerConfig(age_days=0.0), plan=plan
+    )
+    sc = spark.sparkContext
+    jobs = {}
+    try:
+        for topic in ("narrow", "wide"):
+            files = cleaner.candidate_files(topic)
+            assert len(files) == 2
+            group = f"verify-{topic}-{tmp_path.name}"
+            sc.setJobGroup(group, group)
+            frames = list(plan.attempt_frames(topic, files))
+            assert frames and not sc.statusTracker().getJobIdsForGroup(group), (
+                "building the source scan started a Spark job"
+            )
+            verdict = cleaner.verify_topic(topic, files)
+            assert all(verdict.values()) and len(verdict) == 2
+            jobs[topic] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs["wide"] == jobs["narrow"], jobs
