@@ -9,8 +9,65 @@ real cluster AQE coalescing makes the static number far less important.
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
+
+
+def _install_stat_checked_zip_invalidation() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive only when
+    the file on disk changed.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` at the start of
+    every task (``worker_util.setup_spark_files``). Before CPython 3.13 that
+    eagerly re-parses the whole central directory of every zip on the
+    import path, once per ``zipimporter`` instance: a worker holds 14-17
+    over ``pyspark.zip`` (1,328 entries) and py4j, so every Python task
+    (Avro decode, exact-name write, cleaner read-back) paid ~100 ms of CPU
+    before its UDF ran. Here an archive whose ``os.stat`` matches the one
+    taken before its last read rebinds the shared directory-cache entry
+    instead; a changed, replaced or missing archive falls through to the
+    stdlib method. This module is imported by the package ``__init__``, so
+    the method is replaced in every worker that unpickles an engine UDF.
+    """
+    cls = zipimport.zipimporter
+    stdlib_invalidate = getattr(cls, "invalidate_caches", None)  # 3.10+
+    if (
+        stdlib_invalidate is None
+        or sys.version_info >= (3, 13)
+        or not hasattr(zipimport, "_zip_directory_cache")
+        or getattr(stdlib_invalidate, "_stat_checked", False)
+    ):
+        return
+    # archive -> (stat taken before the read, directory dict it produced)
+    last_read: dict[str, tuple[tuple[int, int, int], dict]] = {}
+
+    def invalidate_caches(self):
+        archive = self.archive
+        try:
+            st = os.stat(archive)
+        except OSError:
+            last_read.pop(archive, None)
+            stdlib_invalidate(self)
+            return
+        key = (st.st_mtime_ns, st.st_size, st.st_ino)
+        files = zipimport._zip_directory_cache.get(archive)
+        seen = last_read.get(archive)
+        if seen is not None and seen[0] == key and seen[1] is files:
+            self._files = files
+            return
+        stdlib_invalidate(self)
+        if zipimport._zip_directory_cache.get(archive) is self._files:
+            last_read[archive] = (key, self._files)
+        else:
+            last_read.pop(archive, None)
+
+    invalidate_caches._stat_checked = True
+    cls.invalidate_caches = invalidate_caches
+
+
+_install_stat_checked_zip_invalidation()
 
 
 def get_spark(

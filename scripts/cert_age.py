@@ -18,8 +18,9 @@ registry and writes CERT_AGE.json:
 tests/test_registry_coverage.py asserts the rotation invariant on this
 artifact: every query is either driver-green within the last TWO rounds or
 sits in the first 50 entries of the CURRENT gate head (i.e. it gets a
-fresh row at the next driver run) — the promise the `_GATE_HEAD` comment
-in __spark_entry__.py makes, now machine-checked.
+fresh row at the next driver run). __spark_entry__.py computes that head
+from this file, stalest first, so regenerating it each round is the
+rotation.
 
 Usage: python scripts/cert_age.py          # writes CERT_AGE.json
 """
