@@ -1,6 +1,7 @@
 """Persisted, cell-partitioned IVF index — the serving-side half of the ANN
 story (the in-session operators in `similarity.py` are the build/query
-half).
+half, and the probe reuses their top-k front end: `ivf_cells` for probe
+cells, `_rerank_exact` for scoring and ranking).
 
 At 100 TB the corpus is indexed ONCE: every vector is assigned its home
 coarse cell and the corpus is written `partitionBy(cell)` so each cell is
@@ -18,16 +19,17 @@ layout + Catalyst partition pruning.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from radar_output_restructure_spark.operators.similarity import (
-    _codebook_affinities,
-    _seq_sq_sum,
-    cosine,
+    _codebook,
+    _codebook_argtop,
+    _collect_centroids,
+    _rerank_exact,
+    _vectors,
     ivf_cells,
 )
-from math import sqrt as math_sqrt
 
 
 def write_ivf_index(
@@ -49,16 +51,9 @@ def write_ivf_index(
     import numpy as np
     import pandas as pd
 
-    cent_rows = sorted(
-        centroids.select(
-            F.col(id_col).alias("cell"), F.col(vec_col).alias("centroid")
-        ).collect(),
-        key=lambda r: r.cell,
+    cells_arr, cents, cnorms = _codebook(
+        _collect_centroids(centroids, id_col, vec_col)
     )
-    cells_arr = np.array([row.cell for row in cent_rows])
-    cent_lists = [[float(x) for x in row.centroid] for row in cent_rows]
-    cents = np.array(cent_lists, dtype=np.float64)
-    cnorms = np.array([math_sqrt(_seq_sq_sum(c)) for c in cent_lists])
     id_type = corpus.schema[id_col].dataType.simpleString()
     vec_type = corpus.schema[vec_col].dataType.simpleString()
     cell_type = centroids.schema[id_col].dataType.simpleString()
@@ -68,8 +63,7 @@ def write_ivf_index(
             if len(pdf) == 0:
                 continue
             x = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
-            aff = _codebook_affinities(x, cents, cnorms)
-            home = np.argsort(-aff, axis=1, kind="stable")[:, 0]
+            home = _codebook_argtop(x, cents, cnorms, 1)[:, 0]
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(),
@@ -78,9 +72,7 @@ def write_ivf_index(
                 }
             )
 
-    indexed = corpus.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__v")
-    ).mapInPandas(
+    indexed = _vectors(corpus, id_col, vec_col).mapInPandas(
         assign,
         f"vec_id {id_type}, embedding {vec_type}, cell {cell_type}",
     )
@@ -112,25 +104,14 @@ def probe_ivf_index(
 
     idx = spark.read.parquet(path).filter(F.col("cell").isin(needed))
     qc = spark.createDataFrame(probe_rows, query_cells.schema)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    sims = (
-        idx.join(F.broadcast(qc), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine(F.col("qv"), F.col("embedding")), 6).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return _rerank_exact(
+        idx.join(F.broadcast(qc), "cell"),
+        queries,
+        k,
+        id_col,
+        vec_col,
+        neighbor="vec_id",
+        cv="embedding",
     )
 
 

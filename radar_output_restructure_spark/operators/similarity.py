@@ -1,21 +1,31 @@
 """Similarity search over embedding columns (`array<float>`).
 
-* cosine_topk            — brute-force exact top-k: broadcast the (small)
-                           query set against the corpus, dot products via
-                           zip_with/aggregate (JVM-side fold, no UDF), rank
-                           with a window. At 100 TB the corpus side stays
-                           partitioned; only queries broadcast.
-* hyperplane_lsh_buckets — sign-random-projection LSH: b deterministic
-                           pseudo-random hyperplanes hash each vector to a
-                           b-bit bucket; near neighbors collide with high
-                           probability. The scale path: bucket-join then
-                           re-rank within buckets (candidate ~ corpus/2^b).
-* cosine_topk_lsh        — the two combined: exact re-ranking over LSH
-                           candidates (approximate global recall).
+Every top-k operator is one front end with a pluggable candidate generator:
+query set -> candidates -> scorer -> one ranking rule.
+
+* query set  — `_query_set`: ONE driver collect of the (small by contract)
+  query frame, sorted by id, with oracle-order guarded norms.
+* candidates — the whole corpus (`cosine_topk`, `cosine_topk_int8`,
+  `cosine_topk_pq`, `cosine_range_search`), LSH bucket collisions
+  (`cosine_topk_lsh`, `cosine_topk_lsh_multiprobe`), probed IVF cells
+  (`cosine_topk_ivf`, `cosine_topk_ivfpq`, `ann_index.probe_ivf_index`) or
+  a caller's shortlist (`exact_rerank`).
+* scorer     — exact cosine (`_codebook_affinities` in Arrow, the `cosine`
+  Column fold in `_rerank_exact`), int8 code cosine, or ADC over PQ codes
+  (`_adc_sims`). Corpus-scan scorers prune each Arrow batch to its local
+  top-k (`_local_topk`), so the ranking shuffle moves kilobytes.
+* ranking    — `_rank_topk`: row_number over (sim desc, neighbor_id asc)
+  per query, rank <= k, self-matches excluded.
+
+Codebooks (IVF cells, PQ subquantizers) have one collect
+(`_collect_centroids`), one array form (`_codebook`) and one ranking kernel
+(`_codebook_argtop`). The trainers, LSH bucketing, embedding near-dup and
+the centroid audits live here too.
 
 Dot products fold left-to-right in DOUBLE, so an oracle that folds the same
-order (DuckDB list reduction) reproduces results bit-for-bit; ranking rounds
-to 6 decimals with vec_id tiebreak to stay deterministic anyway.
+order (DuckDB list reduction) reproduces results bit-for-bit; similarities
+round to 6 decimals (`_round6_spark` on the Arrow side) and zero norms
+coalesce to 1, so a zero vector scores exactly 0.0 and never NaN.
 """
 
 from __future__ import annotations
@@ -26,26 +36,14 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _dot(a: Column, b: Column, dims: int | None = None) -> Column:
+def _dot(a: Column, b: Column) -> Column:
     """Dot product of two array columns, folded left-to-right in double.
 
-    Two physical forms with bit-identical results (same fold order):
-
-    * dims=None (default) — zip_with+aggregate higher-order fold. Measured
-      FASTER at every scale tried (sf0.1, 600k pairs x 64 dims): the fold
-      runs on primitive double arrays inside the JVM, while the unrolled
-      alternative blows up generated-code size (192 element_at terms per
-      cosine) past what JIT handles well.
-    * dims=N — unrolled element_at sum, kept for plans where codegen
-      profiling shows the fold dominating; measure before switching.
+    A zip_with+aggregate higher-order fold: it runs on primitive double
+    arrays inside the JVM and measured faster at every scale tried (sf0.1,
+    600k pairs x 64 dims) than an unrolled element_at sum, whose generated
+    code (192 element_at terms per cosine) grows past what JIT handles well.
     """
-    if dims is not None:
-        acc: Column = F.lit(0.0)
-        for i in range(1, dims + 1):
-            acc = acc + F.element_at(a, i).cast("double") * F.element_at(b, i).cast(
-                "double"
-            )
-        return acc
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
@@ -53,19 +51,160 @@ def _dot(a: Column, b: Column, dims: int | None = None) -> Column:
     )
 
 
-def _norm(a: Column, dims: int | None = None) -> Column:
-    return F.sqrt(_dot(a, a, dims))
+def _norm(a: Column) -> Column:
+    return F.sqrt(_dot(a, a))
 
 
-def cosine(a: Column, b: Column, dims: int | None = None) -> Column:
+def cosine(a: Column, b: Column) -> Column:
     # zero-norm guard (module-wide convention): the numerator is 0 for a
     # zero vector, so coalescing its norm to 1 pins cos at exactly 0.0 —
     # under ANSI mode an unguarded 0/0 is a DIVIDE_BY_ZERO task failure,
     # and NaN would rank differently between numpy prunes and SQL windows
-    na, nb = _norm(a, dims), _norm(b, dims)
+    na, nb = _norm(a), _norm(b)
     na = F.when(na == F.lit(0.0), F.lit(1.0)).otherwise(na)
     nb = F.when(nb == F.lit(0.0), F.lit(1.0)).otherwise(nb)
-    return _dot(a, b, dims) / (na * nb)
+    return _dot(a, b) / (na * nb)
+
+
+def _query_set(
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    op: str,
+    label_col: str | None = None,
+) -> tuple:
+    """(ids, vectors, norms, labels): the query set every top-k operator
+    scores against, sorted by id — ids and an (nq, dims) float64 array,
+    `_seq_sq_sum` norms (the oracle's fold order) with the zero-norm
+    guard, labels None without `label_col`. An empty set raises ValueError
+    naming `op`.
+
+    ONE collect of (qid, qv[, label]): a second collect (say, for the
+    labels) would recompute a nondeterministic query frame (sample()/
+    limit() over an unordered source) into a DIFFERENT row set — KeyError
+    at best, a silently wrong exclusion mask at worst — and doubles the
+    driver pull."""
+    import numpy as np
+
+    q_cols = [F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")]
+    if label_col is not None:
+        q_cols.append(F.col(label_col).alias("ql"))
+    q_rows = sorted(queries.select(*q_cols).collect(), key=lambda r: r.qid)
+    if not q_rows:
+        raise ValueError(f"{op} requires a non-empty query set")
+    q_lists = [[float(x) for x in r.qv] for r in q_rows]
+    q_norms = np.array([math_sqrt(_seq_sq_sum(v)) for v in q_lists])
+    return (
+        np.array([r.qid for r in q_rows]),
+        np.array(q_lists, dtype=np.float64),
+        np.where(q_norms == 0.0, 1.0, q_norms),  # zero-norm guard
+        [r.ql for r in q_rows] if label_col is not None else None,
+    )
+
+
+def _vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(vec_id, __v): the projection every Arrow scorer reads."""
+    return df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__v"))
+
+
+def _pair_schema(corpus: DataFrame, id_col: str) -> str:
+    id_type = corpus.schema[id_col].dataType.simpleString()
+    return f"query_id {id_type}, neighbor_id {id_type}, sim double"
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """THE ranking rule of every top-k operator: per query, row_number
+    over (sim desc, neighbor_id asc) — a strict total order, so ties are
+    deterministic — keeping rank <= k."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("sim").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+    )
+
+
+def _local_topk(
+    frame: DataFrame, sims_of, q_ids, k: int, mask_of=None
+) -> DataFrame:
+    """Map-only scoring with a per-batch prune, then `_rank_topk`.
+
+    `frame` carries the corpus id as `vec_id`; `sims_of(pdf)` scores a
+    batch into an (n, nq) matrix and `mask_of(pdf)`, when given, adds an
+    (n, nq) validity matrix. Each batch keeps its local top-k per query
+    (self-matches dropped) — safe because (sim desc, neighbor_id asc) is a
+    strict total order, so the global top-k is contained in the union of
+    batch top-ks — and the final window ranks tasks x queries x k rows:
+    kilobytes at any corpus size, where windowing every scored row would
+    shuffle the whole corpus x queries product."""
+    import numpy as np
+    import pandas as pd
+
+    def score(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            sims = sims_of(pdf)
+            mask = mask_of(pdf) if mask_of is not None else None
+            nbr = pdf["vec_id"].to_numpy()
+            qcol, ncol, scol = [], [], []
+            for j in range(len(q_ids)):
+                valid = nbr != q_ids[j]
+                if mask is not None:
+                    valid &= mask[:, j]
+                sims_j = sims[valid, j]
+                nbr_j = nbr[valid]
+                take = np.lexsort((nbr_j, -sims_j))[:k]
+                qcol.append(np.repeat(q_ids[j], len(take)))
+                ncol.append(nbr_j[take])
+                scol.append(sims_j[take])
+            yield pd.DataFrame(
+                {
+                    "query_id": np.concatenate(qcol),
+                    "neighbor_id": np.concatenate(ncol),
+                    "sim": np.concatenate(scol),
+                }
+            )
+
+    return _rank_topk(frame.mapInPandas(score, _pair_schema(frame, "vec_id")), k)
+
+
+def _rerank_exact(
+    pairs: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    corpus: DataFrame | None = None,
+    neighbor: str = "neighbor_id",
+    cv: str = "cv",
+) -> DataFrame:
+    """Exact Column re-rank of candidate (query_id, `neighbor`) pairs,
+    ranked by `_rank_topk`. Self-pairs are dropped first. With `corpus`,
+    the pairs are bare collisions: they are deduplicated and the corpus
+    vectors join in; without it they already carry the vector in `cv`.
+    Query vectors broadcast-join; sim is the rounded `cosine` fold.
+    `neighbor`/`cv` exist only to keep `probe_ivf_index`'s plan as is."""
+    pairs = pairs.filter(F.col(neighbor) != F.col("query_id"))
+    if corpus is not None:
+        pairs = (
+            pairs.select("query_id", "neighbor_id")
+            .distinct()
+            .join(
+                corpus.select(
+                    F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
+                ),
+                "neighbor_id",
+            )
+        )
+    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
+    sims = pairs.join(F.broadcast(q), "query_id").select(
+        "query_id",
+        F.col(neighbor).alias("neighbor_id"),
+        F.round(cosine(F.col("qv"), F.col(cv)), 6).alias("sim"),
+    )
+    return _rank_topk(sims, k)
 
 
 def cosine_topk(
@@ -85,92 +224,47 @@ def cosine_topk(
     the model currently confuses). Same map-only scan either way — the
     label test is one extra vectorized mask per batch.
 
-    MAP-ONLY scoring with per-batch pruning: the query set is driver-small
-    by contract (the same object the earlier broadcast-crossJoin shipped),
-    so it is collected once and scored inside a mapInPandas closure with
-    the oracle's exact fold order (`_codebook_affinities` — the machinery
-    the IVF coarse quantizer already uses). Each Arrow batch keeps only its
-    LOCAL top-k per query — safe because (sim desc, neighbor_id asc) is a
-    strict total order, so the global top-k is contained in the union of
-    batch top-ks — and the final window ranks tasks x queries x k rows.
-    The earlier plan windowed ALL corpus x queries scored rows (one
-    corpus-sized shuffle per run — at 100 TB that shuffle IS the job);
-    this one shuffles kilobytes regardless of corpus size.
+    MAP-ONLY scoring with per-batch pruning (`_local_topk`): the query
+    set is scored inside a mapInPandas closure with the oracle's exact
+    fold order (`_codebook_affinities` — the machinery the IVF coarse
+    quantizer already uses), and each Arrow batch keeps only its local
+    top-k per query.
     """
     import numpy as np
     import pandas as pd
 
-    # ONE collect of (qid, qv[, label]): a second collect for the labels
-    # would recompute a nondeterministic query frame (sample()/limit() over
-    # an unordered source) into a DIFFERENT row set — KeyError at best, a
-    # silently wrong exclusion mask at worst — and doubles the driver pull.
-    q_cols = [F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")]
-    if exclude_label_col is not None:
-        q_cols.append(F.col(exclude_label_col).alias("ql"))
-    q_rows = sorted(queries.select(*q_cols).collect(), key=lambda r: r.qid)
-    if not q_rows:
-        raise ValueError("cosine_topk requires a non-empty query set")
-    q_ids = [r.qid for r in q_rows]
-    q_labels = None
-    if exclude_label_col is not None:
-        q_labels = [r.ql for r in q_rows]
-    q_lists = [[float(x) for x in r.qv] for r in q_rows]
-    q_arr = np.array(q_lists, dtype=np.float64)
-    q_norms = np.array([math_sqrt(_seq_sq_sum(v)) for v in q_lists])
-    q_norms = np.where(q_norms == 0.0, 1.0, q_norms)  # zero-norm guard
-    q_ids_arr = np.array(q_ids)
-    nq = len(q_ids)
+    q_ids, q_arr, q_norms, q_labels = _query_set(
+        queries, id_col, vec_col, "cosine_topk", exclude_label_col
+    )
 
-    id_type = corpus.schema[id_col].dataType.simpleString()
-    out_schema = f"query_id {id_type}, neighbor_id {id_type}, sim double"
+    def sims_of(pdf):
+        x = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
+        return _codebook_affinities(x, q_arr, q_norms)  # (n, nq) rounded
 
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
-            nbr = pdf["vec_id"].to_numpy()
-            lbl = pdf["__l"].to_numpy() if q_labels is not None else None
-            aff = _codebook_affinities(x, q_arr, q_norms)  # (n, nq) rounded
-            lbl_na = pd.isna(lbl) if lbl is not None else None
-            qcol, ncol, scol = [], [], []
-            for j in range(nq):
-                valid = nbr != q_ids_arr[j]
-                if lbl is not None:
-                    # IS DISTINCT FROM semantics, pinned against the oracle:
-                    # NULL label vs NULL label = SAME class (excluded);
-                    # NULL vs anything else = different (kept). Arrow hands
-                    # int labels with NULLs to pandas as float NaN, where
-                    # plain != would call NaN != NaN True and diverge.
-                    qj = q_labels[j]
-                    if qj is None or (isinstance(qj, float) and qj != qj):
-                        valid &= ~lbl_na
-                    else:
-                        valid &= lbl_na | (lbl != qj)
-                sims_j = aff[valid, j]
-                nbr_j = nbr[valid]
-                take = np.lexsort((nbr_j, -sims_j))[:k]
-                qcol.append(np.repeat(q_ids_arr[j], len(take)))
-                ncol.append(nbr_j[take])
-                scol.append(sims_j[take])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(qcol),
-                    "neighbor_id": np.concatenate(ncol),
-                    "sim": np.concatenate(scol),
-                }
-            )
+    def mask_of(pdf):
+        # IS DISTINCT FROM semantics, pinned against the oracle: NULL label
+        # vs NULL label = SAME class (excluded); NULL vs anything else =
+        # different (kept). Arrow hands int labels with NULLs to pandas as
+        # float NaN, where plain != would call NaN != NaN True and diverge.
+        lbl = pdf["__l"].to_numpy()
+        lbl_na = pd.isna(lbl)
+        mask = np.empty((len(lbl), len(q_labels)), dtype=bool)
+        for j, qj in enumerate(q_labels):
+            if qj is None or (isinstance(qj, float) and qj != qj):
+                mask[:, j] = ~lbl_na
+            else:
+                mask[:, j] = lbl_na | (lbl != qj)
+        return mask
 
     cols = [F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__v")]
     if exclude_label_col is not None:
         cols.append(F.col(exclude_label_col).alias("__l"))
-    pruned = corpus.select(*cols).mapInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pruned.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return _local_topk(
+        corpus.select(*cols),
+        sims_of,
+        q_ids,
+        k,
+        mask_of if q_labels is not None else None,
     )
 
 
@@ -197,23 +291,10 @@ def cosine_range_search(
     import numpy as np
     import pandas as pd
 
-    q_rows = sorted(
-        queries.select(
-            F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
-        ).collect(),
-        key=lambda r: r.qid,
+    q_ids_arr, q_arr, q_norms, _ = _query_set(
+        queries, id_col, vec_col, "cosine_range_search"
     )
-    if not q_rows:
-        raise ValueError("cosine_range_search requires a non-empty query set")
-    q_lists = [[float(x) for x in r.qv] for r in q_rows]
-    q_arr = np.array(q_lists, dtype=np.float64)
-    q_norms = np.array([math_sqrt(_seq_sq_sum(v)) for v in q_lists])
-    q_norms = np.where(q_norms == 0.0, 1.0, q_norms)  # zero-norm guard
-    q_ids_arr = np.array([r.qid for r in q_rows])
     nq = len(q_ids_arr)
-
-    id_type = corpus.schema[id_col].dataType.simpleString()
-    out_schema = f"query_id {id_type}, neighbor_id {id_type}, sim double"
 
     def score(batches):
         for pdf in batches:
@@ -239,9 +320,9 @@ def cosine_range_search(
                     }
                 )
 
-    return corpus.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__v")
-    ).mapInPandas(score, out_schema)
+    return _vectors(corpus, id_col, vec_col).mapInPandas(
+        score, _pair_schema(corpus, id_col)
+    )
 
 
 def _plane_weight(plane: int, dim: int) -> int:
@@ -344,9 +425,7 @@ def hyperplane_lsh_buckets(
                 }
             )
 
-    return df.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__v")
-    ).mapInPandas(bucketize, out_schema)
+    return _vectors(df, id_col, vec_col).mapInPandas(bucketize, out_schema)
 
 
 def auto_num_planes(
@@ -389,33 +468,41 @@ def cosine_topk_lsh(
     per vector) and bucket-partitioned on disk; per-query work is L buckets'
     worth of exact scoring instead of the full corpus.
     """
-    cb = hyperplane_lsh_buckets(corpus, num_planes, dims, id_col, vec_col, num_tables)
-    qb = hyperplane_lsh_buckets(queries, num_planes, dims, id_col, vec_col, num_tables)
-    cand = (
-        cb.select(F.col("vec_id").alias("neighbor_id"), "table", "bucket")
-        .join(
-            F.broadcast(qb.select(F.col("vec_id").alias("query_id"), "table", "bucket")),
-            ["table", "bucket"],
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
+    return _lsh_topk(
+        corpus, queries, k, num_planes, num_tables, dims, id_col, vec_col
     )
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    sims = (
-        cand.join(c, "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("sim"),
-        )
+
+
+def _lsh_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    num_planes: int,
+    num_tables: int,
+    dims: int,
+    id_col: str,
+    vec_col: str,
+    multiprobe: bool = False,
+) -> DataFrame:
+    """The LSH candidate generator: (query_id, neighbor_id) pairs sharing
+    a (table, bucket), re-ranked by `_rerank_exact`.
+    `multiprobe` expands each query bucket with its `num_planes` Hamming-1
+    neighbors (query side only; the corpus side is the same bucket pass)."""
+    cb, qb = (
+        hyperplane_lsh_buckets(df, num_planes, dims, id_col, vec_col, num_tables)
+        for df in (corpus, queries)
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return sims.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    bucket = F.col("bucket")
+    if multiprobe:
+        probes = [bucket] + [
+            bucket.bitwiseXOR(F.lit(1 << i)) for i in range(num_planes)
+        ]
+        bucket = F.explode(F.array(*probes)).alias("bucket")
+    qp = qb.select(F.col("vec_id").alias("query_id"), "table", bucket)
+    cand = cb.select(
+        F.col("vec_id").alias("neighbor_id"), "table", "bucket"
+    ).join(F.broadcast(qp), ["table", "bucket"])
+    return _rerank_exact(cand, queries, k, id_col, vec_col, corpus=corpus)
 
 
 def _adc_tables(q_lists, codebooks, dims: int, m: int):
@@ -440,6 +527,28 @@ def _adc_tables(q_lists, codebooks, dims: int, m: int):
         tq.append(tab)
         csq.append(np.array([_seq_sq_sum(c) for c in cents]))
     return tq, csq
+
+
+def _adc_sims(tq, csq, q_norms, qidx, code_arrs):
+    """THE ADC kernel of PQ and IVF-PQ: rounded cosine of query `qidx`
+    against the reconstruction the m code arrays name. `qidx` broadcasts
+    against the codes — (1, nq) against (n, 1) codes for a dense (n, nq)
+    PQ matrix, one query index per row for IVF-PQ's candidate pairs.
+
+    Subspace terms accumulate in order, ((t0 + t1) + t2) + t3 — the
+    oracle's explicit left-to-right sum. Zero-norm guard: an all-zero
+    reconstruction (a zero vector's codes) pins sim at 0.0 instead of NaN
+    (see _codebook_affinities)."""
+    import numpy as np
+
+    num = tq[0][qidx, code_arrs[0]]
+    den_inner = csq[0][code_arrs[0]]
+    for s in range(1, len(code_arrs)):
+        num = num + tq[s][qidx, code_arrs[s]]
+        den_inner = den_inner + csq[s][code_arrs[s]]
+    rnorm = np.sqrt(den_inner)
+    rnorm = np.where(rnorm == 0.0, 1.0, rnorm)
+    return _round6_spark(num / (q_norms[qidx] * rnorm))
 
 
 def near_dup_pairs_from_buckets(
@@ -543,7 +652,7 @@ def near_dup_pairs_from_buckets(
             return empty
         return pd.concat(outs, ignore_index=True)
 
-    vecs = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__v"))
+    vecs = _vectors(emb, id_col, vec_col)
     return (
         buckets.join(vecs, "vec_id")
         .groupBy("table", "bucket")
@@ -693,15 +802,52 @@ def _codebook_argtop(x, cents, cnorms, take: int):
 def _collect_centroids(
     centroids: DataFrame, id_col: str, vec_col: str
 ) -> list:
-    """The codebook collect shared by `ivf_cells` callers: one sorted
-    driver-side row list, so a caller assigning BOTH corpus and queries
-    (cosine_topk_ivf) pays the collect job once instead of per call."""
+    """THE codebook collect: one sorted driver-side (cell, centroid) row
+    list, so a caller assigning BOTH corpus and queries (cosine_topk_ivf,
+    cosine_topk_ivfpq) pays the collect job once instead of per call."""
     return sorted(
         centroids.select(
             F.col(id_col).alias("cell"), F.col(vec_col).alias("centroid")
         ).collect(),
         key=lambda r: r.cell,
     )
+
+
+def _codebook(cent_rows: list):
+    """(cells, cents, cnorms) of `_collect_centroids` rows: the cell ids,
+    the float64 centroid matrix and its norms in the oracle's fold order
+    (`_codebook_arrays`)."""
+    import numpy as np
+
+    cents, cnorms = _codebook_arrays([row.centroid for row in cent_rows])
+    return np.array([row.cell for row in cent_rows]), cents, cnorms
+
+
+def _codebook_arrays(vectors):
+    """(cents, cnorms) for `_codebook_argtop`/`_codebook_affinities`:
+    float64 rows and `_seq_sq_sum` norms (unguarded — the kernels guard)."""
+    import numpy as np
+
+    lists = [[float(x) for x in v] for v in vectors]
+    return (
+        np.array(lists, dtype=np.float64),
+        np.array([math_sqrt(_seq_sq_sum(c)) for c in lists]),
+    )
+
+
+def _pq_codes(x, books) -> dict:
+    """{code_s: int32}: each subvector's nearest cell in its PQ codebook
+    (`books` = `_codebook_arrays` per subspace), ties to the lowest cell —
+    the IVF assignment rule per subspace."""
+    import numpy as np
+
+    sd = books[0][0].shape[1]
+    return {
+        f"code_{s}": _codebook_argtop(
+            x[:, s * sd : (s + 1) * sd], cents, cnorms, 1
+        )[:, 0].astype(np.int32)
+        for s, (cents, cnorms) in enumerate(books)
+    }
 
 
 def ivf_cells(
@@ -736,14 +882,10 @@ def ivf_cells(
 
     if cent_rows is None:
         cent_rows = _collect_centroids(centroids, id_col, vec_col)
-    cells = [row.cell for row in cent_rows]
-    cent_lists = [[float(x) for x in row.centroid] for row in cent_rows]
-    cents = np.array(cent_lists, dtype=np.float64)
-    cnorms = np.array([math_sqrt(_seq_sq_sum(c)) for c in cent_lists])
+    cells_arr, cents, cnorms = _codebook(cent_rows)
     cell_type = centroids.schema[id_col].dataType.simpleString()
     id_type = df.schema[id_col].dataType.simpleString()
-    take = min(nprobe, len(cells))
-    cells_arr = np.array(cells)
+    take = min(nprobe, len(cells_arr))
 
     def assign(batches):
         for pdf in batches:
@@ -762,9 +904,9 @@ def ivf_cells(
                 }
             )
 
-    return df.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__v")
-    ).mapInPandas(assign, f"vec_id {id_type}, cell {cell_type}, cell_rank int")
+    return _vectors(df, id_col, vec_col).mapInPandas(
+        assign, f"vec_id {id_type}, cell {cell_type}, cell_rank int"
+    )
 
 
 def quantize_embeddings(
@@ -911,72 +1053,24 @@ def cosine_topk_int8(
     exactly in any order (numpy's int64 matmul has no BLAS path).
     """
     import numpy as np
-    import pandas as pd
 
-    q_rows = sorted(
-        queries.select(
-            F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
-        ).collect(),
-        key=lambda r: r.qid,
-    )
-    if not q_rows:
-        raise ValueError("cosine_topk_int8 requires a non-empty query set")
-    q_ids_arr = np.array([r.qid for r in q_rows])
-    q_codes = _int8_codes_np(
-        np.array([[float(x) for x in r.qv] for r in q_rows], dtype=np.float64),
-        bits,
-    )
+    q_ids, q_arr, _, _ = _query_set(queries, id_col, vec_col, "cosine_topk_int8")
+    q_codes = _int8_codes_np(q_arr, bits)
     q_norms = np.sqrt((q_codes * q_codes).sum(axis=1).astype(np.float64))
     q_norms = np.where(q_norms == 0.0, 1.0, q_norms)  # zero-norm guard
-    nq = len(q_rows)
-
-    id_type = corpus.schema[id_col].dataType.simpleString()
-    out_schema = f"query_id {id_type}, neighbor_id {id_type}, sim double"
-
     q_codes_f = q_codes.astype(np.float64)
 
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            raw = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
-            x = _int8_codes_np(raw, bits)
-            nbr = pdf["vec_id"].to_numpy()
-            dots = x.astype(np.float64) @ q_codes_f.T
-            x_norms = np.sqrt((x * x).sum(axis=1).astype(np.float64))
-            # zero-norm guard (see _codebook_affinities): numerator is 0
-            # anyway, and NaN would rank partition-dependently
-            x_norms = np.where(x_norms == 0.0, 1.0, x_norms)
-            sims = _round6_spark(
-                dots / (q_norms[None, :] * x_norms[:, None])
-            )
-            qcol, ncol, scol = [], [], []
-            for j in range(nq):
-                valid = nbr != q_ids_arr[j]
-                sims_j = sims[valid, j]
-                nbr_j = nbr[valid]
-                take = np.lexsort((nbr_j, -sims_j))[:k]
-                qcol.append(np.repeat(q_ids_arr[j], len(take)))
-                ncol.append(nbr_j[take])
-                scol.append(sims_j[take])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(qcol),
-                    "neighbor_id": np.concatenate(ncol),
-                    "sim": np.concatenate(scol),
-                }
-            )
+    def sims_of(pdf):
+        raw = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
+        x = _int8_codes_np(raw, bits)
+        dots = x.astype(np.float64) @ q_codes_f.T
+        x_norms = np.sqrt((x * x).sum(axis=1).astype(np.float64))
+        # zero-norm guard (see _codebook_affinities): numerator is 0
+        # anyway, and NaN would rank partition-dependently
+        x_norms = np.where(x_norms == 0.0, 1.0, x_norms)
+        return _round6_spark(dots / (q_norms[None, :] * x_norms[:, None]))
 
-    pruned = corpus.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__v")
-    ).mapInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pruned.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _local_topk(_vectors(corpus, id_col, vec_col), sims_of, q_ids, k)
 
 
 #: Driver-path cap for Lloyd training (the duplicate_clusters / BPE dual-path
@@ -1056,6 +1150,22 @@ def _driver_seed_order(ids: list) -> list[int]:
     )
 
 
+def _lloyd_update(cents: list, counts, totals) -> list:
+    """One Lloyd update of integer-micro centroids, shared by the driver
+    and distributed trainers: floor(sum * 1.0 / count) evaluated in IEEE
+    double (sums stay far below 2^53, so the division is exact
+    cross-engine); empty cells keep their previous centroid. Iterates
+    `cents`: `counts`/`totals` may be padded to k past fewer seeds."""
+    import math
+
+    return [
+        [int(math.floor(int(t) * 1.0 / int(counts[j]))) for t in totals[j]]
+        if counts[j] > 0
+        else list(c)
+        for j, c in enumerate(cents)
+    ]
+
+
 def train_ivf_centroids(
     df: DataFrame,
     k: int = 16,
@@ -1128,26 +1238,14 @@ def train_ivf_centroids(
         k = len(cents)
         micro = np.floor(xm * 1e6).astype(np.int64)
         for _ in range(iters):
-            cent_lists = [[m / 1e6 for m in cm] for cm in cents]
-            c_arr = np.array(cent_lists, dtype=np.float64)
-            c_norms = np.array(
-                [math.sqrt(_seq_sq_sum(c)) for c in cent_lists]
+            c_arr, c_norms = _codebook_arrays(
+                [[m / 1e6 for m in cm] for cm in cents]
             )
             cell = _codebook_argtop(xm, c_arr, c_norms, 1)[:, 0]
             counts = np.bincount(cell, minlength=k).astype(np.int64)
             totals = np.zeros((k, dims), dtype=np.int64)
             np.add.at(totals, cell, micro)
-            new_cents = [list(c) for c in cents]
-            for j in range(k):
-                if counts[j] > 0:
-                    new_cents[j] = [
-                        int(
-                            math.floor(
-                                int(totals[j, i]) * 1.0 / int(counts[j])
-                            )
-                        )
-                        for i in range(dims)
-                    ]
+            new_cents = _lloyd_update(cents, counts, totals)
             if new_cents == cents:
                 break
             cents = new_cents
@@ -1187,9 +1285,9 @@ def train_ivf_centroids(
     )
     k = len(cents)
     for _ in range(iters):
-        cent_lists = [[m / 1e6 for m in cm] for cm in cents]
-        c_arr = np.array(cent_lists, dtype=np.float64)
-        c_norms = np.array([math.sqrt(_seq_sq_sum(c)) for c in cent_lists])
+        c_arr, c_norms = _codebook_arrays(
+            [[m / 1e6 for m in cm] for cm in cents]
+        )
 
         def partials(batches, c_arr=c_arr, c_norms=c_norms):
             for pdf in batches:
@@ -1217,13 +1315,7 @@ def train_ivf_centroids(
         for _i, row in stats.iterrows():
             counts[row["cell"]] += row["cnt"]
             totals[row["cell"]] += np.asarray(row["sums"], dtype=np.int64)
-        new_cents = [list(c) for c in cents]  # empty cells keep previous
-        for j in range(k):
-            if counts[j] > 0:
-                new_cents[j] = [
-                    int(math.floor(int(totals[j, i]) * 1.0 / int(counts[j])))
-                    for i in range(dims)
-                ]
+        new_cents = _lloyd_update(cents, counts, totals)
         if new_cents == cents:
             break
         cents = new_cents
@@ -1308,29 +1400,17 @@ def train_pq_codebooks(
         for _ in range(iters):
             changed = False
             for s, (lo, hi) in enumerate(bounds):
-                cent_lists = [[mc / 1e6 for mc in cm] for cm in cents[s]]
-                c_arr = np.array(cent_lists, dtype=np.float64)
-                c_norms = np.array(
-                    [math.sqrt(_seq_sq_sum(c)) for c in cent_lists]
+                c_arr, c_norms = _codebook_arrays(
+                    [[mc / 1e6 for mc in cm] for cm in cents[s]]
                 )
                 xs = xm[:, lo:hi]
                 cell = _codebook_argtop(xs, c_arr, c_norms, 1)[:, 0]
                 counts = np.bincount(cell, minlength=k).astype(np.int64)
                 totals = np.zeros((k, sd), dtype=np.int64)
                 np.add.at(totals, cell, micros[s])
-                for j in range(k):
-                    if counts[j] > 0:
-                        new = [
-                            int(
-                                math.floor(
-                                    int(totals[j, d]) * 1.0 / int(counts[j])
-                                )
-                            )
-                            for d in range(sd)
-                        ]
-                        if new != cents[s][j]:
-                            cents[s][j] = new
-                            changed = True
+                new = _lloyd_update(cents[s], counts, totals)
+                changed |= new != cents[s]
+                cents[s] = new
             if not changed:
                 break
         return [
@@ -1358,16 +1438,12 @@ def train_pq_codebooks(
         StorageLevel.MEMORY_AND_DISK
     )
     for _ in range(iters):
-        cent_lists = [
-            [[micro / 1e6 for micro in cm] for cm in cents[s]] for s in range(m)
-        ]
-        c_arrs = [np.array(cl, dtype=np.float64) for cl in cent_lists]
-        c_norms = [
-            np.array([math.sqrt(_seq_sq_sum(c)) for c in cl])
-            for cl in cent_lists
+        books = [
+            _codebook_arrays([[mc / 1e6 for mc in cm] for cm in cents[s]])
+            for s in range(m)
         ]
 
-        def partials(batches, c_arrs=c_arrs, c_norms=c_norms):
+        def partials(batches, books=books):
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
@@ -1375,7 +1451,7 @@ def train_pq_codebooks(
                 frames = []
                 for s, (lo, hi) in enumerate(bounds):
                     xs = x[:, lo:hi]
-                    cell = _codebook_argtop(xs, c_arrs[s], c_norms[s], 1)[:, 0]
+                    cell = _codebook_argtop(xs, *books[s], 1)[:, 0]
                     cnt = np.bincount(cell, minlength=k).astype(np.int64)
                     micro = np.floor(xs * 1e6).astype(np.int64)
                     sums = np.zeros((k, sd), dtype=np.int64)
@@ -1404,19 +1480,9 @@ def train_pq_codebooks(
             )
         changed = False
         for s in range(m):
-            for j in range(k):
-                if counts[s, j] > 0:
-                    new = [
-                        int(
-                            math.floor(
-                                int(totals[s, j, d]) * 1.0 / int(counts[s, j])
-                            )
-                        )
-                        for d in range(sd)
-                    ]
-                    if new != cents[s][j]:
-                        cents[s][j] = new
-                        changed = True
+            new = _lloyd_update(cents[s], counts[s], totals[s])
+            changed |= new != cents[s]
+            cents[s] = new
         if not changed:
             break
     src.unpersist()
@@ -1443,16 +1509,10 @@ def pq_encode(
     import numpy as np
     import pandas as pd
 
-    m = len(codebooks)
-    cents = [np.array(cb, dtype=np.float64) for cb in codebooks]
-    cnorms = [
-        np.array([math_sqrt(_seq_sq_sum(c)) for c in cb]) for cb in codebooks
-    ]
-    sd = cents[0].shape[1]
+    books = [_codebook_arrays(cb) for cb in codebooks]
     id_type = df.schema[id_col].dataType.simpleString()
-    code_cols = [f"code_{s}" for s in range(m)]
     out_schema = f"vec_id {id_type}, " + ", ".join(
-        f"{c} int" for c in code_cols
+        f"code_{s} int" for s in range(len(codebooks))
     )
 
     def encode(batches):
@@ -1461,15 +1521,10 @@ def pq_encode(
                 continue
             x = np.stack(pdf["__v"].to_numpy()).astype(np.float64)
             cols = {"vec_id": pdf["vec_id"].to_numpy()}
-            for s in range(m):
-                cols[code_cols[s]] = _codebook_argtop(
-                    x[:, s * sd : (s + 1) * sd], cents[s], cnorms[s], 1
-                )[:, 0].astype(np.int32)
+            cols.update(_pq_codes(x, books))
             yield pd.DataFrame(cols)
 
-    return df.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__v")
-    ).mapInPandas(encode, out_schema)
+    return _vectors(df, id_col, vec_col).mapInPandas(encode, out_schema)
 
 
 def cosine_topk_pq(
@@ -1499,78 +1554,26 @@ def cosine_topk_pq(
     local top-k so the final window ranks tasks x queries x k rows.
     """
     import numpy as np
-    import pandas as pd
 
     codebooks = train_pq_codebooks(
         corpus, m, codebook_k, iters, id_col, vec_col, dims
     )
     codes = pq_encode(corpus, codebooks, id_col, vec_col)
 
-    q_rows = sorted(
-        queries.select(
-            F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
-        ).collect(),
-        key=lambda r: r.qid,
+    q_ids, q_arr, q_norms, _ = _query_set(
+        queries, id_col, vec_col, "cosine_topk_pq"
     )
-    if not q_rows:
-        raise ValueError("cosine_topk_pq requires a non-empty query set")
-    q_ids_arr = np.array([r.qid for r in q_rows])
-    q_lists = [[float(x) for x in r.qv] for r in q_rows]
-    nq = len(q_lists)
     # per-subspace ADC tables (shared with cosine_topk_ivfpq): the
     # reconstruction-dot / reconstruction-norm pieces in oracle fold order
-    tq, csq = _adc_tables(q_lists, codebooks, dims, m)
-    q_norms = np.array([math_sqrt(_seq_sq_sum(v)) for v in q_lists])
-    q_norms = np.where(q_norms == 0.0, 1.0, q_norms)  # zero-norm guard
-
-    id_type = corpus.schema[id_col].dataType.simpleString()
-    out_schema = f"query_id {id_type}, neighbor_id {id_type}, sim double"
+    tq, csq = _adc_tables(q_arr.tolist(), codebooks, dims, m)
+    qidx = np.arange(len(q_ids))[None, :]
     code_cols = [f"code_{s}" for s in range(m)]
 
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            nbr = pdf["vec_id"].to_numpy()
-            code_arrs = [pdf[c].to_numpy() for c in code_cols]
-            # accumulate subspace terms in order: ((t0 + t1) + t2) + t3 —
-            # the oracle's explicit left-to-right sum
-            num = tq[0][:, code_arrs[0]]  # (nq, n)
-            den_inner = csq[0][code_arrs[0]]  # (n,)
-            for s in range(1, m):
-                num = num + tq[s][:, code_arrs[s]]
-                den_inner = den_inner + csq[s][code_arrs[s]]
-            # zero-norm guard: an all-zero reconstruction (zero vector's
-            # codes) pins sim at 0.0 instead of NaN (see _codebook_affinities)
-            rnorm = np.sqrt(den_inner)
-            rnorm = np.where(rnorm == 0.0, 1.0, rnorm)
-            den = q_norms[:, None] * rnorm[None, :]
-            sim = _round6_spark(num / den)
-            qcol, ncol, scol = [], [], []
-            for j in range(nq):
-                valid = nbr != q_ids_arr[j]
-                sims_j = sim[j, valid]
-                nbr_j = nbr[valid]
-                take = np.lexsort((nbr_j, -sims_j))[:k]
-                qcol.append(np.repeat(q_ids_arr[j], len(take)))
-                ncol.append(nbr_j[take])
-                scol.append(sims_j[take])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(qcol),
-                    "neighbor_id": np.concatenate(ncol),
-                    "sim": np.concatenate(scol),
-                }
-            )
+    def sims_of(pdf):
+        codes_n = [pdf[c].to_numpy()[:, None] for c in code_cols]
+        return _adc_sims(tq, csq, q_norms, qidx, codes_n)  # (n, nq)
 
-    pruned = codes.mapInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pruned.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _local_topk(codes, sims_of, q_ids, k)
 
 
 def _seq_sq_sum(xs: list[float]) -> float:
@@ -1602,27 +1605,8 @@ def cosine_topk_ivf(
     query_cells = ivf_cells(
         queries, centroids, id_col, vec_col, nprobe=nprobe, cent_rows=cent_rows
     ).select(F.col("vec_id").alias("query_id"), "cell")
-    cand = (
-        corpus_cells.join(F.broadcast(query_cells), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    sims = (
-        cand.join(c, "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return sims.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    cand = corpus_cells.join(F.broadcast(query_cells), "cell")
+    return _rerank_exact(cand, queries, k, id_col, vec_col, corpus=corpus)
 
 
 def cosine_topk_ivfpq(
@@ -1668,23 +1652,9 @@ def cosine_topk_ivfpq(
     )
 
     # fused encode + home-cell assignment: one Arrow pass, zero shuffle
-    cent_rows = sorted(
-        centroids.select(
-            F.col(id_col).alias("cell"), F.col(vec_col).alias("centroid")
-        ).collect(),
-        key=lambda r: r.cell,
-    )
-    coarse_cells = np.array([row.cell for row in cent_rows])
-    coarse_lists = [[float(x) for x in row.centroid] for row in cent_rows]
-    coarse = np.array(coarse_lists, dtype=np.float64)
-    coarse_norms = np.array(
-        [math_sqrt(_seq_sq_sum(c)) for c in coarse_lists]
-    )
-    pq_cents = [np.array(cb, dtype=np.float64) for cb in codebooks]
-    pq_norms = [
-        np.array([math_sqrt(_seq_sq_sum(c)) for c in cb]) for cb in codebooks
-    ]
-    sd_enc = dims // m
+    cent_rows = _collect_centroids(centroids, id_col, vec_col)
+    coarse_cells, coarse, coarse_norms = _codebook(cent_rows)
+    books = [_codebook_arrays(cb) for cb in codebooks]
     id_type_in = corpus.schema[id_col].dataType.simpleString()
     cell_type = centroids.schema[id_col].dataType.simpleString()
     code_cols = [f"code_{s}" for s in range(m)]
@@ -1702,43 +1672,24 @@ def cosine_topk_ivfpq(
                 "vec_id": pdf["vec_id"].to_numpy(),
                 "cell": coarse_cells[home],
             }
-            for s in range(m):
-                cols[code_cols[s]] = _codebook_argtop(
-                    x[:, s * sd_enc : (s + 1) * sd_enc],
-                    pq_cents[s],
-                    pq_norms[s],
-                    1,
-                )[:, 0].astype(np.int32)
+            cols.update(_pq_codes(x, books))
             yield pd.DataFrame(cols)
 
-    indexed = corpus.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__v")
-    ).mapInPandas(index_rows, index_schema)
+    indexed = _vectors(corpus, id_col, vec_col).mapInPandas(
+        index_rows, index_schema
+    )
 
     query_cells = ivf_cells(
-        queries, centroids, id_col, vec_col, nprobe=nprobe
+        queries, centroids, id_col, vec_col, nprobe=nprobe, cent_rows=cent_rows
     ).select(F.col("vec_id").alias("query_id"), "cell")
     cand = indexed.join(F.broadcast(query_cells), "cell").filter(
         F.col("vec_id") != F.col("query_id")
     )
 
-    q_rows = sorted(
-        queries.select(
-            F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
-        ).collect(),
-        key=lambda r: r.qid,
+    q_ids, q_arr, q_norms, _ = _query_set(
+        queries, id_col, vec_col, "cosine_topk_ivfpq"
     )
-    if not q_rows:
-        raise ValueError("cosine_topk_ivfpq requires a non-empty query set")
-    q_ids = np.array([r.qid for r in q_rows])
-    q_lists = [[float(x) for x in r.qv] for r in q_rows]
-    tq, csq = _adc_tables(q_lists, codebooks, dims, m)  # shared with PQ
-    q_norms = np.array([math_sqrt(_seq_sq_sum(v)) for v in q_lists])
-    q_norms = np.where(q_norms == 0.0, 1.0, q_norms)  # zero-norm guard
-
-    id_type = corpus.schema[id_col].dataType.simpleString()
-    out_schema = f"query_id {id_type}, neighbor_id {id_type}, sim double"
-    code_cols = [f"code_{s}" for s in range(m)]
+    tq, csq = _adc_tables(q_arr.tolist(), codebooks, dims, m)  # shared with PQ
 
     def score(batches):
         for pdf in batches:
@@ -1746,33 +1697,18 @@ def cosine_topk_ivfpq(
                 continue
             qidx = np.searchsorted(q_ids, pdf["query_id"].to_numpy())
             code_arrs = [pdf[c].to_numpy() for c in code_cols]
-            # left-to-right subspace accumulation — the oracle's fold order
-            num = tq[0][qidx, code_arrs[0]]
-            den_inner = csq[0][code_arrs[0]]
-            for s in range(1, m):
-                num = num + tq[s][qidx, code_arrs[s]]
-                den_inner = den_inner + csq[s][code_arrs[s]]
-            rnorm = np.sqrt(den_inner)  # zero-norm guard, see the PQ scorer
-            rnorm = np.where(rnorm == 0.0, 1.0, rnorm)
-            sim = _round6_spark(num / (q_norms[qidx] * rnorm))
             yield pd.DataFrame(
                 {
                     "query_id": pdf["query_id"].to_numpy(),
                     "neighbor_id": pdf["vec_id"].to_numpy(),
-                    "sim": sim,
+                    "sim": _adc_sims(tq, csq, q_norms, qidx, code_arrs),
                 }
             )
 
     sims = cand.select("query_id", "vec_id", *code_cols).mapInPandas(
-        score, out_schema
+        score, _pair_schema(corpus, id_col)
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _rank_topk(sims, k)
 
 
 def exact_rerank(
@@ -1803,22 +1739,10 @@ def exact_rerank(
     import numpy as np
     import pandas as pd
 
-    q_rows = sorted(
-        queries.select(
-            F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
-        ).collect(),
-        key=lambda r: r.qid,
+    q_ids, q_arr, q_norms, _ = _query_set(
+        queries, id_col, vec_col, "exact_rerank"
     )
-    if not q_rows:
-        raise ValueError("exact_rerank requires a non-empty query set")
-    q_lists = [[float(x) for x in r.qv] for r in q_rows]
-    q_arr = np.array(q_lists, dtype=np.float64)
-    q_norms = np.array([math_sqrt(_seq_sq_sum(v)) for v in q_lists])
-    q_norms = np.where(q_norms == 0.0, 1.0, q_norms)  # zero-norm guard
-    q_index = {r.qid: i for i, r in enumerate(q_rows)}
-
-    id_type = corpus.schema[id_col].dataType.simpleString()
-    out_schema = f"query_id {id_type}, neighbor_id {id_type}, sim double"
+    q_index = {qid: i for i, qid in enumerate(q_ids.tolist())}
 
     cand = (
         corpus.select(
@@ -1841,30 +1765,19 @@ def exact_rerank(
             # group batch rows by their OWN query and fold only against
             # that query (the _codebook_argtop grouped-recompute trick):
             # a dense (n, nq) affinity matrix would spend nq x the FLOPs
-            # and keep one column per row. The per-query slice uses the
-            # identical sequential per-dimension fold, so the scores are
-            # bit-equal to the dense form.
+            # and keep one column per row. Each slice is the same exact
+            # fold (`_codebook_affinities` against one query), so the
+            # scores are bit-equal to the dense form.
             qidx = pdf["query_id"].map(q_index).to_numpy()
             sims = np.empty(len(pdf))
             order = np.argsort(qidx, kind="stable")
             bounds = np.searchsorted(qidx[order], np.arange(len(q_arr) + 1))
-            n_dims = x.shape[1]
             for j in range(len(q_arr)):
-                lo, hi = bounds[j], bounds[j + 1]
-                if lo == hi:
-                    continue
-                rows_j = order[lo:hi]
-                xj = x[rows_j]
-                qj = q_arr[j]
-                acc = np.zeros(hi - lo)
-                self_dot = np.zeros(hi - lo)
-                for d in range(n_dims):
-                    xd = xj[:, d]
-                    acc = acc + xd * qj[d]
-                    self_dot = self_dot + xd * xd
-                vn = np.sqrt(self_dot)
-                vn = np.where(vn == 0.0, 1.0, vn)
-                sims[rows_j] = _round6_spark(acc / (vn * q_norms[j]))
+                rows_j = order[bounds[j] : bounds[j + 1]]
+                if len(rows_j):
+                    sims[rows_j] = _codebook_affinities(
+                        x[rows_j], q_arr[j : j + 1], q_norms[j : j + 1]
+                    )[:, 0]
             yield pd.DataFrame(
                 {
                     "query_id": pdf["query_id"].to_numpy(),
@@ -1873,13 +1786,7 @@ def exact_rerank(
                 }
             )
 
-    scored = cand.mapInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _rank_topk(cand.mapInPandas(score, _pair_schema(corpus, id_col)), k)
 
 
 def semantic_dedup(
@@ -2357,46 +2264,7 @@ def cosine_topk_lsh_multiprobe(
     so the corpus-side plan is identical to the single-probe index: one
     map-only bucket pass, join, per-query top-k.
     """
-    cb = hyperplane_lsh_buckets(
-        corpus, num_planes, dims, id_col, vec_col, num_tables
-    )
-    qb = hyperplane_lsh_buckets(
-        queries, num_planes, dims, id_col, vec_col, num_tables
-    )
-    probes = [F.col("bucket")] + [
-        F.col("bucket").bitwiseXOR(F.lit(1 << i)) for i in range(num_planes)
-    ]
-    qp = qb.select(
-        F.col("vec_id").alias("query_id"),
-        "table",
-        F.explode(F.array(*probes)).alias("bucket"),
-    )
-    cand = (
-        cb.select(F.col("vec_id").alias("neighbor_id"), "table", "bucket")
-        .join(F.broadcast(qp), ["table", "bucket"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    sims = (
-        cand.join(c, "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return _lsh_topk(
+        corpus, queries, k, num_planes, num_tables, dims, id_col, vec_col,
+        multiprobe=True,
     )
